@@ -1,5 +1,6 @@
 import os
 import sys
+import warnings
 
 import pytest
 
@@ -167,8 +168,27 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched, modules = set(), {}
     for item in items:
         base = item.nodeid.split("::")[0].split("/")[-1]
         name = item.name.split("[")[0]
+        modules.setdefault(base, getattr(item, "module", None))
         if (base, name) in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add((base, name))
+    # A stale entry (test renamed, moved or deleted) would silently
+    # leave a slow test in the default tier. Warn about entries naming
+    # a file that does not exist, or a test its collected module does
+    # not define; files a partial run did not collect are not judged.
+    here = os.path.dirname(os.path.abspath(__file__))
+    for base, name in sorted(_SLOW_TESTS - matched):
+        module = modules.get(base)
+        if not os.path.exists(os.path.join(here, base)) or (
+            module is not None and not hasattr(module, name)
+        ):
+            warnings.warn(
+                pytest.PytestWarning(
+                    f"conftest._SLOW_TESTS entry ({base!r}, {name!r}) "
+                    "matches no collected test"
+                )
+            )

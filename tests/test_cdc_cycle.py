@@ -122,7 +122,8 @@ def test_delete_guard(spark, tmp_store, rng):
     s1 = s0[:140]
     stats = engine.update(PLAYER, snapshot(spark, s1))
     assert stats.deletes == 60 and not stats.deletes_applied
-    assert tmp_store.read("player").count() == 200  # nothing deleted
+    # nothing deleted, and the count observed on the write says so
+    assert stats.total_rows == tmp_store.read("player").count() == 200
 
 
 def test_run_cycle_matches_reference_main(spark, tmp_store, rng):
@@ -273,3 +274,123 @@ def test_changelog_auto_compaction_policy(spark, tmp_store):
     files = [f for f in os.listdir(d) if f.endswith(".parquet")]
     assert len(files) == 1  # epoch-4 compaction just collapsed everything
     assert engine.changelog("t2").count() == 40  # lossless (no retention set)
+
+
+def _cycle_fixture(spark, rng):
+    """A small run_cycle fixture and its next snapshot: one update, one
+    delete, one insert and one member move."""
+    players = make_players(rng, 60)
+    tribes = [Row(id=t, name=f"tribe{t}") for t in range(1, 4)]
+    members = [Row(id_member=p.id, id_tribe=(p.id % 3) + 1) for p in players]
+    by_id = {p.id: p for p in players}
+    d = by_id[1].asDict()
+    d["cheese_gathered"] += 9
+    by_id[1] = Row(**d)
+    del by_id[2]
+    by_id[61] = make_players(rng, 1, start_id=61)[0]
+    moved = [
+        Row(id_member=m.id_member, id_tribe=1 if m.id_member == 3 else m.id_tribe)
+        for m in members
+        if m.id_member != 2
+    ]
+    first = [snapshot(spark, x) for x in (players, tribes, members)]
+    second = [snapshot(spark, x) for x in (list(by_id.values()), tribes, moved)]
+    return first, second
+
+
+def test_store_reads_carry_written_schema(spark, tmp_store, rng):
+    """Every table a bootstrap, an incremental cycle and a type-change
+    epoch write reads back, through its ``_schema.json``, with the
+    schema Spark would infer from the parquet footers — and without
+    the footer-reading job. A version without the file still reads."""
+    import os
+
+    from updater_spark.schema import TableSpec
+    from updater_spark.sources.store import SCHEMA_FILE
+
+    engine = CdcEngine(tmp_store)
+    first, second = _cycle_fixture(spark, rng)
+    engine.run_cycle(*first)
+    engine.run_cycle(*second)
+    acct = TableSpec("acct", "id")
+    engine.update(acct, spark.createDataFrame([Row(id=i, bal=i) for i in range(9)]))
+    engine.update(
+        acct, spark.createDataFrame([Row(id=i, bal=i + 0.5) for i in range(9)])
+    )
+    assert dict(tmp_store.read("acct").dtypes)["bal"] == "double"
+
+    tables = sorted(
+        t for t in os.listdir(tmp_store.root) if tmp_store.exists(t)
+    )
+    for t in (
+        "player__delta",
+        "player__deleted",
+        "player__fingerprints",
+        "tribe_active",
+        "tribe_stats",
+        "acct",
+    ):
+        assert t in tables
+    assert tmp_store.read("tribe__deleted").count() == 0
+    for t in tables:
+        path = tmp_store.current_path(t)
+        assert os.path.exists(os.path.join(path, SCHEMA_FILE)), t
+        assert tmp_store.read(t).schema == spark.read.parquet(path).schema, t
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def read_jobs(group: str, table: str) -> int:
+        sc.setJobGroup(group, "store read")
+        try:
+            tmp_store.read(table)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    assert read_jobs("read-with-schema-file", "tribe_stats") == 0
+    path = tmp_store.current_path("tribe_stats")
+    want = sorted(tmp_store.read("tribe_stats").collect())
+    os.remove(os.path.join(path, SCHEMA_FILE))
+    # a version written without the file falls back to inference
+    assert read_jobs("read-without-schema-file", "tribe_stats") >= 1
+    got = tmp_store.read("tribe_stats")
+    assert got.schema == spark.read.parquet(path).schema
+    assert sorted(got.collect()) == want
+
+
+# Jobs one incremental run_cycle on _cycle_fixture starts at most: the
+# three updates and post_update, in the test session's config. Before
+# store reads carried their schema, counts were observed on the writes
+# and written tables were read back instead of recomputed, this cycle
+# started 82 jobs.
+INCREMENTAL_CYCLE_JOBS = 49
+
+
+def test_incremental_cycle_job_budget(spark, tmp_store, rng, monkeypatch):
+    sc = spark.sparkContext
+    group = "incremental-cycle-job-budget"
+
+    def grouped(fn):
+        # job groups are per thread: update_many runs each table's
+        # update on its own pool thread, so each call sets the group
+        def run(*args, **kwargs):
+            sc.setJobGroup(group, "incremental run_cycle")
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+
+        return run
+
+    engine = CdcEngine(tmp_store)
+    first, second = _cycle_fixture(spark, rng)
+    engine.run_cycle(*first)
+    monkeypatch.setattr(CdcEngine, "update", grouped(CdcEngine.update))
+    monkeypatch.setattr(CdcEngine, "post_update", grouped(CdcEngine.post_update))
+    stats = engine.run_cycle(*second)
+    assert (stats["player"].upserts, stats["player"].deletes) == (2, 1)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= INCREMENTAL_CYCLE_JOBS, jobs

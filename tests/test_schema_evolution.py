@@ -65,6 +65,7 @@ def test_added_column_epoch_lands_on_source(spark, tmp_store, policy):
     assert _sorted(tmp_store.read("acct")) == _sorted(src2)
     assert tmp_store.read("acct").columns == src2.columns
     assert stats.deletes == 1 and stats.deletes_applied
+    assert stats.total_rows == tmp_store.read("acct").count() == 40
 
     if policy == "full_churn":
         # every surviving row reclassified: 39 survivors + 1 insert
@@ -148,11 +149,12 @@ def test_partitioned_mode_schema_epoch_full_rewrite_then_prunes(
     )
     eng.update(SPEC, spark.createDataFrame(base_rows()))
     src2 = _evolve_add(spark, mutate_ids={5, 9}, delete_ids={3})
-    eng.update(SPEC, src2)
+    stats2 = eng.update(SPEC, src2)
     got = tmp_store.spark.read.parquet(
         tmp_store._ppath("acct")
     ).drop(CdcEngine.BUCKET_COL)
     assert sorted(tuple(r) for r in got.select(*src2.columns).collect()) == _sorted(src2)
+    assert stats2.total_rows == got.count() == 40
     # the table is still bucket-partitioned and the next epoch still
     # does incremental pruned writes
     src3 = src2.withColumn(
@@ -163,6 +165,7 @@ def test_partitioned_mode_schema_epoch_full_rewrite_then_prunes(
     got3 = tmp_store.spark.read.parquet(
         tmp_store._ppath("acct")
     ).drop(CdcEngine.BUCKET_COL)
+    assert stats3.total_rows == got3.count() == 40
     assert (
         sorted(tuple(r) for r in got3.select(*src3.columns).collect())
         == _sorted(src3)
@@ -178,6 +181,7 @@ def test_full_churn_guard_skipped_deletes_null_backfill(spark, tmp_store):
     stats = eng.update(SPEC, src2)
     assert not stats.deletes_applied and stats.deletes == 2
     rep = tmp_store.read("acct")
+    assert stats.total_rows == rep.count() == 41
     kept = rep.filter(F.col("id").isin(3, 4)).collect()
     assert len(kept) == 2 and all(r["tier"] is None for r in kept)
 
@@ -225,6 +229,15 @@ def test_replay_across_schema_boundary(spark, tmp_store):
 def test_apply_delta_rejects_schema_change(spark, tmp_store):
     eng = CdcEngine(tmp_store)
     eng.update(SPEC, spark.createDataFrame(base_rows()))
+    # a same-basis micro-batch applies: one update, one unchanged
+    # re-delivery, one insert
+    same = spark.createDataFrame(
+        [Row(id=1, name="u1", bal=1), Row(id=2, name="u2", bal=20),
+         Row(id=99, name="u99", bal=0)]
+    )
+    stats = eng.apply_delta(SPEC, same)
+    assert stats.upserts == tmp_store.read("acct__delta").count() == 2
+    assert stats.total_rows == tmp_store.read("acct").count() == 41
     batch = spark.createDataFrame([Row(id=1, name="u1", tier="x", bal=0)])
     with pytest.raises(ValueError, match="schema change in delta feed"):
         eng.apply_delta(SPEC, batch)
@@ -572,6 +585,7 @@ def test_type_change_epoch_lands_on_source(spark, tmp_store, policy):
     rep = tmp_store.read("acct")
     assert dict(rep.dtypes)["bal"] == "double"
     assert _sorted(rep) == _sorted(src2)
+    assert stats.total_rows == rep.count() == 40
     # the NEXT epoch is normal incremental again (basis + types rotated)
     src3 = src2.withColumn(
         "bal", F.when(F.col("id") == 2, F.lit(123.25)).otherwise(F.col("bal"))

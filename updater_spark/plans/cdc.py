@@ -26,7 +26,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from updater_spark.functions.fingerprints import fingerprint_table, row_fingerprint
@@ -35,11 +35,10 @@ from updater_spark.functions.scores import (
     apply_scores,
     normalize_names,
 )
-from updater_spark.operators.diff import snapshot_diff, split_diff
+from updater_spark.operators.diff import DELETE, INSERT, UPDATE, snapshot_diff, split_diff
 from updater_spark.operators.merge import (
     BROADCAST_KEY_LIMIT,
     DELETE_GUARD_DEFAULT,
-    DeleteResult,
     _maybe_broadcast,
     changelog_preimages,
     changelog_replay,
@@ -66,6 +65,14 @@ class UpdateStats:
     deletes_applied: bool = True
     total_rows: int = 0
     extra: dict = field(default_factory=dict)
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter attached: write the returned frame,
+    then read ``obs.get["rows"]``. The count rides on the write's own
+    job instead of a second scan."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 class CdcEngine:
@@ -440,15 +447,15 @@ class CdcEngine:
         )
         full = self._computed(spec, with_fp)
         if self.partition_buckets:
-            self.store.write_partitioned(
-                spec.name,
+            main, obs = _observe_rows(
                 full.drop("_fp").withColumn(
                     self.BUCKET_COL, self._bucket_expr(spec.primary_key)
-                ),
-                self.BUCKET_COL,
+                )
             )
+            self.store.write_partitioned(spec.name, main, self.BUCKET_COL)
         else:
-            self.store.write(spec.name, full.drop("_fp"))
+            main, obs = _observe_rows(full.drop("_fp"))
+            self.store.write(spec.name, main)
         self._write_fp(
             spec.name,
             full.select(
@@ -459,7 +466,7 @@ class CdcEngine:
             spec.name, data_cols, self._basis_types(source, data_cols)
         )
         self._append_basis_history(spec.name, 0, data_cols)
-        total = self._read_main(spec.name).count()
+        total = obs.get["rows"]
         # Bootstrap writes straight to the main table; the delta equals
         # the full table (download.py:494 "" if table.is_empty).
         self.store.write(f"{spec.name}__delta", self._read_main(spec.name))
@@ -597,8 +604,10 @@ class CdcEngine:
             )
             rep_fp = self._read_fp(spec.name)
 
-        # J1: the diff join. Materialized once (small output: changed
-        # keys only) so the three consumers don't re-run the join.
+        # J1: the diff join. It holds every key of both sides, the
+        # unchanged ones too, and is persisted: the counts, the id
+        # sets, the merge's touched keys and the fingerprint rotation
+        # all read it instead of re-running the join.
         # At a full-churn schema boundary the cached hashes were
         # rendered over a DIFFERENT basis than src_fp — cross-basis
         # hash equality is a meaningless coincidence ('1x' from [name]
@@ -613,9 +622,8 @@ class CdcEngine:
         try:
             parts = split_diff(diff)
 
-            # ONE job materializes the diff and yields every count the
-            # cycle needs: upsert/update stats AND the delete guard —
-            # no separate count() jobs later.
+            # ONE job materializes the diff and yields the class
+            # counts: upsert/update stats AND the delete guard.
             counts = {
                 r["change_type"]: r["n"]
                 for r in diff.groupBy("change_type")
@@ -633,9 +641,9 @@ class CdcEngine:
             del_hint = n_deletes < BROADCAST_KEY_LIMIT
 
             # J2/S4: fetch full rows for changed/new keys, compute
-            # scores + normalization on the delta only. Persisted: the
-            # changelog, merge, delta-write and stats all reuse it
-            # without re-running the semi join.
+            # scores + normalization on the delta only. The semi join
+            # runs once, in the ``__delta`` write; the merge reads the
+            # written table back.
             delta = self._computed(
                 spec,
                 semi_join_fetch(
@@ -644,11 +652,18 @@ class CdcEngine:
                     spec.primary_key,
                     hint_broadcast=hint,
                 ),
-            ).persist()
+            )
 
             old = self._read_main(spec.name)
             delete_keys = parts.deletes.withColumnRenamed("id", spec.primary_key)
             apply_del = n_deletes < self.delete_guard
+            # the keys whose old rows the merge replaces or drops
+            touched = diff.filter(
+                F.col("change_type").isin(
+                    INSERT, UPDATE, *([DELETE] if apply_del else [])
+                )
+            ).select(F.col("id").alias(spec.primary_key))
+            touched_hint = n_upserts + n_deletes < BROADCAST_KEY_LIMIT
 
             # J5: changelog pre-images (old versions of updated rows);
             # "full" mode adds delete pre-images + insert markers so
@@ -687,26 +702,20 @@ class CdcEngine:
                 self._append_basis_history(spec.name, epoch, data_cols)
 
             self.store.write(f"{spec.name}__delta", delta)
+            delta = self.store.read(f"{spec.name}__delta")
             # the epoch's applied delete keys — empty when the guard
             # tripped, so consumers never act on skipped deletes
             self.store.write(
                 f"{spec.name}__deleted",
                 delete_keys if apply_del else delete_keys.limit(0),
             )
+            obs = None
             if evolution:
                 # a schema boundary re-shapes every surviving row, so
                 # bucket pruning is impossible — merge with alignment
                 # and rewrite the table (all buckets) in the new shape
                 merged = self._merge_evolved(
-                    spec,
-                    old,
-                    delta,
-                    delete_keys,
-                    apply_del,
-                    source,
-                    evolution,
-                    hint,
-                    del_hint,
+                    spec, old, touched, touched_hint, delta, source, evolution
                 )
                 if self.partition_buckets:
                     # dynamic overwrite (NOT a static full overwrite):
@@ -726,8 +735,9 @@ class CdcEngine:
                         .distinct()
                         .collect()
                     }
+                    main, obs = _observe_rows(merged_b)
                     self.store.overwrite_partitions(
-                        spec.name, merged_b, self.BUCKET_COL
+                        spec.name, main, self.BUCKET_COL
                     )
                     emptied = [
                         b
@@ -739,59 +749,57 @@ class CdcEngine:
                             spec.name, self.BUCKET_COL, emptied
                         )
                 else:
-                    self.store.write(spec.name, merged)
+                    main, obs = _observe_rows(merged)
+                    self.store.write(spec.name, main)
             elif self.partition_buckets:
                 self._write_incremental_partitioned(
-                    spec,
-                    old,
-                    delta,
-                    delete_keys,
-                    apply_del,
-                    hint_broadcast=hint and del_hint,
+                    spec, delta, touched, touched_hint
                 )
             else:
-                # S5/S10: REPLACE-semantics upsert + guarded deletes S7,
-                # full-table rewrite (fine for small sinks; partitioned
-                # mode above prunes the rewrite at scale).
-                merged = merge_upsert(
-                    old, delta, spec.primary_key, hint_broadcast=hint
+                # S5/S10 + S7: REPLACE-semantics upsert and guarded
+                # deletes in one anti join, full-table rewrite (fine
+                # for small sinks; partitioned mode above prunes the
+                # rewrite at scale).
+                kept = old.join(
+                    _maybe_broadcast(touched, touched_hint),
+                    spec.primary_key,
+                    "anti",
                 )
-                if apply_del:
-                    merged = merged.join(
-                        _maybe_broadcast(delete_keys.distinct(), del_hint),
-                        spec.primary_key,
-                        "anti",
-                    )
-                self.store.write(spec.name, merged)
-            dres = DeleteResult(
-                result=None, applied=apply_del, delete_count=n_deletes
-            )
+                main, obs = _observe_rows(kept.unionByName(delta))
+                self.store.write(spec.name, main)
 
             # S9/S8: fingerprint rotation — overwrite with this run's
             # source fingerprints (write-then-promote is atomic). After
             # a rebase epoch the diff hashes covered only the common
             # columns; the cache must rotate to the FULL new basis so
-            # the next epoch diffs normally.
+            # the next epoch diffs normally. Otherwise the diff's
+            # non-delete rows are every source key with its new hash:
+            # the rows of src_fp, without re-scanning the source.
             if rebase:
-                self._write_fp(
-                    spec.name,
-                    fingerprint_table(
-                        source, spec.primary_key, data_cols, self.algo
-                    ),
+                new_fp = fingerprint_table(
+                    source, spec.primary_key, data_cols, self.algo
                 )
             else:
-                self._write_fp(spec.name, src_fp)
+                new_fp = diff.filter(F.col("change_type") != DELETE).select(
+                    "id", F.col("new_hash").alias("hashed")
+                )
+            self._write_fp(spec.name, new_fp)
             self._write_basis(spec.name, data_cols, src_types)
 
-            delta.unpersist()
             return UpdateStats(
                 table=spec.name,
                 bootstrap=False,
                 upserts=n_upserts,
                 updates=counts.get("update", 0),
-                deletes=dres.delete_count,
-                deletes_applied=dres.applied,
-                total_rows=self._read_main(spec.name).count(),
+                deletes=n_deletes,
+                deletes_applied=apply_del,
+                # the hash-partitioned path writes only the buckets it
+                # touched, so no write sees every row: it counts
+                total_rows=(
+                    obs.get["rows"]
+                    if obs is not None
+                    else self._read_main(spec.name).count()
+                ),
                 extra={"schema_change": evolution} if evolution else {},
             )
         finally:
@@ -801,20 +809,19 @@ class CdcEngine:
         self,
         spec: TableSpec,
         old: DataFrame,
+        touched: DataFrame,
+        touched_hint: bool,
         delta: DataFrame,
-        delete_keys: DataFrame,
-        apply_del: bool,
         source: DataFrame,
         evolution: dict,
-        hint: bool,
-        del_hint: bool,
     ) -> DataFrame:
-        """Merge across a schema boundary: surviving old rows are
-        projected onto the delta's (new) schema — dropped columns go
-        away, added columns NULL-backfill — before the union, so the
-        replica's shape follows the source exactly as the reference's
-        does (its write set is re-read from ``information_schema``
-        every run, table.py:66-91).
+        """Merge across a schema boundary: surviving old rows (those
+        whose key is not in ``touched``) are projected onto the
+        delta's (new) schema — dropped columns go away, added columns
+        NULL-backfill — before the union, so the replica's shape
+        follows the source exactly as the reference's does (its write
+        set is re-read from ``information_schema`` every run,
+        table.py:66-91).
 
         With added columns the survivors' new values come from a
         narrow ``(pk, added...)`` source projection joined onto the
@@ -829,13 +836,7 @@ class CdcEngine:
         guard-skipped replica-only rows, which are not in the source
         and correctly read NULL from the left join."""
         pk = spec.primary_key
-        kept = old.join(
-            _maybe_broadcast(delta.select(pk).distinct(), hint), pk, "anti"
-        )
-        if apply_del:
-            kept = kept.join(
-                _maybe_broadcast(delete_keys.distinct(), del_hint), pk, "anti"
-            )
+        kept = old.join(_maybe_broadcast(touched, touched_hint), pk, "anti")
         added = [c for c in evolution["added"] if c not in old.columns]
         if added:
             kept = kept.join(source.select(pk, *added), pk, "left")
@@ -845,29 +846,25 @@ class CdcEngine:
     def _write_incremental_partitioned(
         self,
         spec: TableSpec,
-        old: DataFrame,
         delta: DataFrame,
-        delete_keys: DataFrame,
-        apply_del: bool = True,
+        touched: DataFrame,
         hint_broadcast: bool = True,
     ) -> None:
-        """Rewrite only the hash buckets containing changed/deleted
-        keys (dynamic partition overwrite).
+        """Rewrite only the hash buckets containing ``touched`` keys
+        (upserted, plus applied deletes) with dynamic partition
+        overwrite.
 
-        New content for an affected bucket = its old rows minus
-        upserted/deleted keys, plus the delta rows landing there; all
-        other buckets' files are untouched on disk (verified in
+        New content for an affected bucket = its old rows minus the
+        touched keys, plus the delta rows landing there; all other
+        buckets' files are untouched on disk (verified in
         tests/test_partitioned_cdc.py via file mtimes)."""
         pk = spec.primary_key
         bucketed_old = self.store.read_partitioned(spec.name)
         delta_b = delta.withColumn(self.BUCKET_COL, self._bucket_expr(pk))
 
-        touched_keys = delta.select(pk)
-        if apply_del:
-            touched_keys = touched_keys.unionByName(delete_keys.select(pk))
         affected = [
             r[0]
-            for r in touched_keys.select(
+            for r in touched.select(
                 self._bucket_expr(pk).alias("b")
             ).distinct().collect()
         ]
@@ -876,9 +873,9 @@ class CdcEngine:
         kept = bucketed_old.filter(
             F.col(self.BUCKET_COL).isin(affected)
         ).join(
-            # touched = upserts + deletes; the caller gates the hint
-            # on both measured diff counts (VERDICT r5 #4)
-            _maybe_broadcast(touched_keys.distinct(), hint_broadcast),
+            # the caller gates the hint on the touched key count
+            # (VERDICT r5 #4)
+            _maybe_broadcast(touched, hint_broadcast),
             pk,
             "anti",
         )
@@ -986,14 +983,21 @@ class CdcEngine:
             spec.primary_key,
         )
         self._append_changelog(spec.name, preimages)
+        # the semi join runs once, in the ``__delta`` write; the merge
+        # reads the written table back
+        delta, delta_obs = _observe_rows(delta)
+        self.store.write(f"{spec.name}__delta", delta)
+        delta = self.store.read(f"{spec.name}__delta")
         if self.partition_buckets:
-            empty_deletes = delta.select(spec.primary_key).limit(0)
-            self._write_incremental_partitioned(spec, old, delta, empty_deletes)
+            self._write_incremental_partitioned(
+                spec, delta, delta.select(spec.primary_key)
+            )
+            # only the touched buckets were written: count the table
+            total = self._read_main(spec.name).count()
         else:
-            self.store.write(spec.name, merge_upsert(old, delta, spec.primary_key))
-        self.store.write(
-            f"{spec.name}__delta", delta
-        )
+            main, obs = _observe_rows(merge_upsert(old, delta, spec.primary_key))
+            self.store.write(spec.name, main)
+            total = obs.get["rows"]
         new_fp = merge_upsert(
             rep_fp, changed.withColumnRenamed("new_hash", "hashed"), "id"
         )
@@ -1001,8 +1005,8 @@ class CdcEngine:
         return UpdateStats(
             table=spec.name,
             bootstrap=False,
-            upserts=delta.count(),
-            total_rows=self._read_main(spec.name).count(),
+            upserts=delta_obs.get["rows"],
+            total_rows=total,
         )
 
     # -- entry point C: derived aggregates (post_update.py) ------------
@@ -1031,9 +1035,15 @@ class CdcEngine:
                 ]
 
         if not was_bootstrap:
-            active = tribe_active(tribe, member, player_new)
-            self.store.write("tribe_active", active)
-            stats = tribe_stats(active, member, player, stat_cols, bootstrap=False)
+            self.store.write("tribe_active", tribe_active(tribe, member, player_new))
+            # built on the written table, not on a re-run of its joins
+            stats = tribe_stats(
+                self.store.read("tribe_active"),
+                member,
+                player,
+                stat_cols,
+                bootstrap=False,
+            )
         else:
             stats = tribe_stats(
                 tribe, member, player, stat_cols, bootstrap=True, player_new=player_new

@@ -9,6 +9,17 @@ that: every write lands in a fresh ``v{N}`` directory and a tiny
 Readers always resolve ``_CURRENT`` first, so a crashed writer leaves
 the previous version intact (same crash-safety contract, any table).
 
+Each version directory also holds ``_schema.json``: the written
+frame's ``df.schema.json()``, stored after the parquet files and
+before the pointer swap. ``read`` hands it to ``.schema(...)``, which
+skips the one-task footer-reading job Spark otherwise runs to infer
+the schema (on a 4-core VM, local[3]: about 120 ms of CPU per read
+with inference, 19 ms with the file). Spark ignores files whose
+names start with ``_``, and it makes a given schema nullable at every
+level, so the result equals the inferred schema (tests/test_cdc_cycle.py
+checks every table a CDC cycle writes). A version written without the
+file (by an older writer) still reads, by inference.
+
 In production this store is exactly what Delta/Iceberg provide
 (atomic commit log + snapshots); the engine's operators are pure
 DataFrame functions, so swapping this class for ``spark.table`` /
@@ -65,12 +76,16 @@ lock generalized (optimistic CAS on a log), see SURVEY §7.2.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import socket
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_schema.json"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -291,11 +306,15 @@ class TableStore:
             path = os.path.join(self._dir(name), f"v{version}")
             if not os.path.exists(path):
                 raise FileNotFoundError(f"table {name!r} has no version v{version}")
-            return self.spark.read.parquet(path)
-        path = self.current_path(name)
-        if path is None:
-            raise FileNotFoundError(f"table {name!r} has no current version")
-        return self.spark.read.parquet(path)
+        else:
+            path = self.current_path(name)
+            if path is None:
+                raise FileNotFoundError(f"table {name!r} has no current version")
+        reader = self.spark.read
+        with contextlib.suppress(FileNotFoundError):
+            with open(os.path.join(path, SCHEMA_FILE)) as f:
+                reader = reader.schema(StructType.fromJson(json.load(f)))
+        return reader.parquet(path)
 
     def versions(self, name: str) -> list[int]:
         d = self._dir(name)
@@ -309,11 +328,12 @@ class TableStore:
         self,
         name: str,
         df: DataFrame,
-        partition_by: list[str] | None = None,
         num_files: int | None = None,
     ) -> str:
         """Write a new version, then atomically promote the pointer
         (the reference's hash-cache rotation, download.py:572-581).
+        The version's schema file lands between the two (module
+        docstring).
 
         ``num_files`` controls output file count for small sink tables
         (avoid thousands of tiny files at local scale; at cluster
@@ -330,10 +350,9 @@ class TableStore:
             next_v = f"v{max([int(v[1:]) for v in versions], default=-1) + 1}"
             path = os.path.join(d, next_v)
             writer = df.coalesce(num_files) if num_files else df
-            w = writer.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(path)
+            writer.write.mode("overwrite").parquet(path)
+            with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+                f.write(df.schema.json())
             tmp = self._pointer(name) + ".tmp"
             with open(tmp, "w") as f:
                 f.write(next_v)
