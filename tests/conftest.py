@@ -62,6 +62,7 @@ _SLOW_TESTS = {
     ("test_ann_stream.py", "test_replayed_batch_is_idempotent"),
     ("test_ann_stream.py", "test_stream_matches_batch_search"),
     ("test_asof.py", "test_asof_fuzz_vs_python"),
+    ("test_broadcast_gating.py", "test_apply_delta_unhinted_above_limit"),
     ("test_broadcast_gating.py", "test_cdc_update_runs_unhinted_above_limit"),
     ("test_broadcast_gating.py", "test_partitioned_cdc_unhinted_above_limit"),
     ("test_bucketing.py", "test_engine_bucketed_fingerprints_cycle"),

@@ -95,3 +95,42 @@ def test_partitioned_cdc_unhinted_above_limit(spark, tmp_path, monkeypatch):
     assert rows_nohint == sorted(
         (r["k"], r["v"]) for r in mutated.collect()
     )
+
+
+@pytest.mark.parametrize("buckets", [None, 4], ids=["full_rewrite", "partitioned"])
+def test_apply_delta_unhinted_above_limit(spark, tmp_path, monkeypatch, buckets):
+    """A micro-batch's merge gates its broadcast on the observed
+    ``__delta`` count too: with the limit forced to 0 the batch
+    applies through shuffle joins, to the same replica and stats as
+    the hinted run."""
+    base = spark.range(200).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+    )
+    # updates to every 9th key plus 20 new keys; untouched keys are
+    # absent from the batch, which a delta feed never reads as deletes
+    batch = (
+        base.filter(F.col("k") % 9 == 0)
+        .withColumn("v", F.col("v") + 100)
+        .unionByName(
+            spark.range(200, 220).select(
+                F.col("id").alias("k"), F.lit(0).cast("long").alias("v")
+            )
+        )
+    )
+
+    def run(root):
+        eng = CdcEngine(TableStore(spark, str(root)), partition_buckets=buckets)
+        spec = TableSpec("t", "k", has_scores=False)
+        eng.update(spec, base)
+        stats = eng.apply_delta(spec, batch)
+        rows = sorted((r["k"], r["v"]) for r in eng._read_main("t").collect())
+        return (stats.upserts, stats.total_rows), rows
+
+    s_hint, rows_hint = run(tmp_path / "hinted")
+    monkeypatch.setattr(cdc_mod, "BROADCAST_KEY_LIMIT", 0)
+    s_nohint, rows_nohint = run(tmp_path / "unhinted")
+    assert rows_hint == rows_nohint
+    assert s_hint == s_nohint == (43, 220)
+    expected = {r["k"]: r["v"] for r in base.collect()}
+    expected.update({r["k"]: r["v"] for r in batch.collect()})
+    assert rows_nohint == sorted(expected.items())

@@ -5,6 +5,7 @@ fix)."""
 import glob
 import os
 
+import pytest
 from pyspark.sql import Row
 
 from updater_spark.plans.cdc import CdcEngine
@@ -59,23 +60,65 @@ def test_partitioned_update_rewrites_only_touched_buckets(spark, tmp_path):
     assert st2.total_rows == g_engine._read_main("items").count() == 499
 
 
-def test_partitioned_matches_full_rewrite(spark, tmp_path):
-    """Same scenario through both storage modes ⇒ identical replicas."""
+@pytest.mark.parametrize(
+    "s0, s1, buckets, dropped",
+    [
+        pytest.param(
+            [Row(id=i, v=i * 3) for i in range(1, 301)],
+            [
+                Row(id=i, v=(0 if i % 7 == 0 else i * 3))
+                for i in range(1, 321)
+                if i % 11 != 0
+            ],
+            4,
+            0,
+            id="churn",
+        ),
+        # Five keys in 64 buckets: key 3 is alone in its bucket, so its
+        # delete empties the bucket. Dynamic overwrite replaces only
+        # buckets present in the written rows, so the merge must drop
+        # the emptied one. This case fails on 07b2394 and earlier, whose
+        # partitioned replica kept key 3 while reporting it deleted.
+        pytest.param(
+            [Row(id=i, v=i) for i in range(1, 6)],
+            [Row(id=i, v=i) for i in (1, 2, 4, 5)],
+            64,
+            1,
+            id="emptied_bucket",
+        ),
+        # deleting every key drops every bucket; the table must still
+        # read, as empty
+        pytest.param(
+            [Row(id=i, v=i) for i in range(1, 6)], [], 64, 5, id="emptied_table"
+        ),
+    ],
+)
+def test_partitioned_matches_full_rewrite(spark, tmp_path, s0, s1, buckets, dropped):
+    """Same scenario through both storage modes ⇒ identical replicas,
+    ``total_rows`` and applied-delete feeds."""
     from updater_spark.sources.store import TableStore
 
     spec = TableSpec("t", "id")
-    s0 = [Row(id=i, v=i * 3) for i in range(1, 301)]
-    s1 = [Row(id=i, v=(0 if i % 7 == 0 else i * 3)) for i in range(1, 321) if i % 11 != 0]
-
     results = []
-    for buckets in (None, 4):
-        store = TableStore(spark, str(tmp_path / f"store_{buckets}"))
-        eng = CdcEngine(store, partition_buckets=buckets)
-        eng.update(spec, spark.createDataFrame(s0))
-        eng.update(spec, spark.createDataFrame(s1))
-        rows = {(r["id"], r["v"]) for r in eng._read_main("t").collect()}
-        results.append(rows)
+    for b in (None, buckets):
+        root = str(tmp_path / f"store_{b}")
+        store = TableStore(spark, root)
+        eng = CdcEngine(store, partition_buckets=b)
+        eng.update(spec, spark.createDataFrame(s0, "id long, v long"))
+        before = _mtimes(root, "t")
+        stats = eng.update(spec, spark.createDataFrame(s1, "id long, v long"))
+        assert len(before) - len(_mtimes(root, "t")) == (dropped if b else 0)
+        results.append(
+            (
+                {(r["id"], r["v"]) for r in eng._read_main("t").collect()},
+                stats.total_rows,
+                stats.deletes_applied,
+                {r["id"] for r in store.read("t__deleted").collect()},
+            )
+        )
     assert results[0] == results[1]
+    assert results[0][0] == {(r["id"], r["v"]) for r in s1}
+    assert results[0][1] == len(s1)
 
 
 def test_partitioned_and_bucketed_fingerprints_compose(spark, tmp_path):

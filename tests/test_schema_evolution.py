@@ -607,8 +607,7 @@ def test_type_change_on_legacy_sidecar_is_skipped(spark, tmp_store):
     # rewrite the sidecar in the legacy bare-list format
     legacy = json.dumps(["id", "name", "bal"])
     tmp_store.write_sidecar("acct__fingerprints", "basis", legacy)
-    assert eng._read_basis("acct") == ["id", "name", "bal"]
-    assert eng._read_basis_types("acct") is None
+    assert eng._read_basis("acct") == (["id", "name", "bal"], None)
 
     # a same-schema epoch runs clean (no evolution) and re-arms types
     src2 = spark.createDataFrame(
@@ -619,11 +618,10 @@ def test_type_change_on_legacy_sidecar_is_skipped(spark, tmp_store):
     )
     stats = eng.update(SPEC, src2)
     assert stats.extra == {} and stats.upserts == 1
-    assert eng._read_basis_types("acct") == {
-        "id": "bigint",
-        "name": "string",
-        "bal": "bigint",
-    }
+    assert eng._read_basis("acct") == (
+        ["id", "name", "bal"],
+        {"id": "bigint", "name": "string", "bal": "bigint"},
+    )
     # ...so a retype NOW is detected
     src3 = spark.createDataFrame(
         [Row(id=r.id, name=r.name, bal=float(r.bal)) for r in base_rows()]

@@ -18,7 +18,10 @@ with inference, 19 ms with the file). Spark ignores files whose
 names start with ``_``, and it makes a given schema nullable at every
 level, so the result equals the inferred schema (tests/test_cdc_cycle.py
 checks every table a CDC cycle writes). A version written without the
-file (by an older writer) still reads, by inference.
+file (by an older writer) still reads, by inference. Hash-partitioned
+tables keep the file at their root too, but read it only once every
+partition has been dropped: Spark cannot infer a schema from a
+directory without data files, and such a table reads as empty.
 
 In production this store is exactly what Delta/Iceberg provide
 (atomic commit log + snapshots); the engine's operators are pure
@@ -36,9 +39,12 @@ therefore takes a per-table lock file (``_LOCK``, created O_EXCL with
 pid + timestamp + host); a second writer fails LOUDLY with
 ``ConcurrentWriteError`` instead of corrupting ``_CURRENT``. The lock
 is re-entrant WITHIN a ``TableStore`` instance, and multi-step
-maintenance sequences (e.g. an IVF index's overwrite+drop pair) hold
-it across all their steps via the public ``locked()`` context
-manager.
+maintenance sequences hold it across all their steps via the public
+``locked()`` context manager. The CDC engine's hash-partitioned merge
+is one: dynamic overwrite replaces only the partitions present in the
+new rows, so a bucket whose last key was deleted is dropped with
+``drop_partitions``, under the same lock as the overwrite (an IVF
+index's overwrite+drop pair is another).
 
 Stale locks left by crashed writers are broken only when the holder
 is provably or plausibly gone:
@@ -86,6 +92,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 SCHEMA_FILE = "_schema.json"
+
+
+def _write_schema(path: str, df: DataFrame) -> None:
+    with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+        f.write(df.schema.json())
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -282,9 +293,6 @@ class TableStore:
             except FileNotFoundError:
                 pass
 
-    # internal alias kept for the existing call sites / tests
-    _write_lock = locked
-
     def current_path(self, name: str) -> str | None:
         ptr = self._pointer(name)
         if not os.path.exists(ptr):
@@ -344,15 +352,14 @@ class TableStore:
         writer gets ``ConcurrentWriteError``, never a corrupted
         ``_CURRENT``).
         """
-        with self._write_lock(name):
+        with self.locked(name):
             d = self._dir(name)
             versions = [v for v in os.listdir(d) if v.startswith("v")]
             next_v = f"v{max([int(v[1:]) for v in versions], default=-1) + 1}"
             path = os.path.join(d, next_v)
             writer = df.coalesce(num_files) if num_files else df
             writer.write.mode("overwrite").parquet(path)
-            with open(os.path.join(path, SCHEMA_FILE), "w") as f:
-                f.write(df.schema.json())
+            _write_schema(path, df)
             tmp = self._pointer(name) + ".tmp"
             with open(tmp, "w") as f:
                 f.write(next_v)
@@ -457,7 +464,7 @@ class TableStore:
         reads as empty through the callers' exists-guards; writing an
         EMPTY parquet directory instead would leave a schema-less
         directory that ``spark.read.parquet`` refuses to load."""
-        with self._write_lock(name):
+        with self.locked(name):
             d = self._appendable_dir(name)
             shutil.rmtree(d, ignore_errors=True)
             ptr = self._appendable_pointer(name)
@@ -482,7 +489,7 @@ class TableStore:
         pointer, so a crashed compaction leaves the old directory
         intact — same promote-on-success contract as versioned writes.
         """
-        with self._write_lock(name):
+        with self.locked(name):
             current = self._appendable_dir(name)
             df = self.spark.read.parquet(current)
             if predicate is not None:
@@ -511,6 +518,7 @@ class TableStore:
         with self.locked(name):
             path = self._ppath(name)
             df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+            _write_schema(path, df)
             return path
 
     def overwrite_partitions(
@@ -533,6 +541,7 @@ class TableStore:
                 .partitionBy(partition_col)
                 .parquet(path)
             )
+            _write_schema(path, df)
             return path
 
     def append_partitions(
@@ -556,7 +565,17 @@ class TableStore:
             return path
 
     def read_partitioned(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._ppath(name))
+        path = self._ppath(name)
+        schema_file = os.path.join(path, SCHEMA_FILE)
+        if os.path.exists(schema_file) and not any(
+            "=" in d for d in os.listdir(path)
+        ):
+            # every partition dropped (or none written): an empty
+            # table in the schema of its last write (module docstring)
+            with open(schema_file) as f:
+                schema = StructType.fromJson(json.load(f))
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.parquet(path)
 
     def exists_partitioned(self, name: str) -> bool:
         return os.path.exists(self._ppath(name))
@@ -629,7 +648,7 @@ class TableStore:
         stable 100M-row replica side never reshuffles. A crashed writer
         leaves the read buffer untouched.
         """
-        with self._write_lock(name):
+        with self.locked(name):
             current = self.current_bucketed(name)
             target_buf = 1 if current == self._catalog_name(name, 0) else 0
             target = self._catalog_name(name, target_buf)
